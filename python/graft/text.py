@@ -102,8 +102,9 @@ def lang_scores(df, text="text", out="lang_pred"):
 
 
 def connected_components(vertices, edges, max_iter=25):
-    """(id, component) labels: component = min vertex id, via iterative
-    min-label propagation with pointer jumping."""
+    """(id, component) labels: component = min vertex id, via a driver
+    union-find when the edges fit the driver budget, else iterative
+    min-label propagation with pointer jumping (max_iter caps its rounds)."""
     spark, jvm = ctx(vertices)
     return lift(spark, jvm.graft.graph.ConnectedComponents.run(
         vertices._jdf, edges._jdf, int(max_iter)))

@@ -2373,12 +2373,33 @@ object SparkEntry {
         p.getFileSystem(s.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
       } catch { case _: Exception => Long.MaxValue } // unknown -> keep config
-    val derived = math.max(1L, math.min(old.toLong, bytes / (32L << 20) + 1L)).toInt
-    if (derived.toString != old) System.err.println(
-      s"[replay] state parallelism $old -> $derived ($bytes fixture bytes)")
-    s.conf.set(key, derived.toString)
-    try body finally s.conf.set(key, old)
+    replayStateParallelism(old, bytes) match {
+      case None => body
+      case Some(derived) =>
+        s.conf.set(key, derived.toString)
+        try body finally s.conf.set(key, old)
+    }
   }
+
+  /** The replay's state partition count: one per 32 MiB of fixture, at
+    * least 1, at most the `configured` shuffle partitions. None when
+    * `configured` is not a number: the replay then runs on the session's
+    * conf unchanged. Both fallbacks (that one, and an unknown fixture size,
+    * `Long.MaxValue`, which keeps the configured count) are said on stderr. */
+  private[graft] def replayStateParallelism(configured: String, fixtureBytes: Long): Option[Int] =
+    configured.toLongOption match {
+      case None =>
+        System.err.println(s"[replay] spark.sql.shuffle.partitions='$configured' is not a " +
+          "number; state parallelism left as configured")
+        None
+      case Some(n) =>
+        if (fixtureBytes == Long.MaxValue) System.err.println(
+          s"[replay] fixture size unknown; state parallelism kept at the configured $n")
+        val derived = math.max(1L, math.min(n, fixtureBytes / (32L << 20) + 1L)).toInt
+        if (derived != n) System.err.println(
+          s"[replay] state parallelism $n -> $derived ($fixtureBytes fixture bytes)")
+        Some(derived)
+    }
 
   /** Remove a per-run replay fixture directory (best-effort). */
   private def deleteRecursively(path: String): Unit = {

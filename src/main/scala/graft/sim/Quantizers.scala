@@ -47,7 +47,8 @@ object Quantizers {
 
   /** The `nprobe` nearest centers by (distance, index) — exactly the stable
     * `sortBy(_._1).take(nprobe)` of the UDFs it replaces (repeated strict-<
-    * extraction ≡ stable sort on distance with unique ascending indices). */
+    * extraction under `Double.compare` ≡ stable sort on distance with unique
+    * ascending indices, NaN and +Inf distances included). */
   def nearestCells(v: ArrayData, cs: Array[Array[Double]], nprobe: Int): ArrayData = {
     val k = cs.length
     val n = v.numElements()
@@ -66,11 +67,12 @@ object Quantizers {
     val used = new Array[Boolean](k)
     var s = 0
     while (s < m) {
+      // Double.compare orders NaN after +Inf after every finite distance,
+      // so a row of non-finite distances still picks a cell
       var best = -1
-      var bestD = Double.MaxValue
       j = 0
       while (j < k) {
-        if (!used(j) && ds(j) < bestD) { bestD = ds(j); best = j }
+        if (!used(j) && (best < 0 || java.lang.Double.compare(ds(j), ds(best)) < 0)) best = j
         j += 1
       }
       used(best) = true

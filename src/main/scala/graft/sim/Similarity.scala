@@ -1,5 +1,7 @@
 package graft.sim
 
+import graft.DriverBudget
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -223,27 +225,23 @@ object Similarity {
     centers
   }
 
-  /** Driver-side byte budget for quantizer training samples. The row caps
-    * (`quantizerMaxRows`/`trainMaxRows`) bound COUNT, not SIZE: at dim 4096
-    * a 100k-row collect is ~3 GB of driver heap. The effective cap is
-    * min(rowCap, budget / (dim·8)) so the collected sample is bounded in
-    * BYTES at any dimensionality. */
-  private[graft] val quantizerByteBudget: Long = 256L << 20
-
-  /** Effective sample-row cap for a training collect at `dim` doubles/row. */
+  /** Effective sample-row cap for a training collect at `dim` doubles/row:
+    * min(rowCap, budget / (dim·8)), so the sample collected for quantizer
+    * training is bounded in BYTES (see [[graft.DriverBudget]]) at any
+    * dimensionality. */
   private[graft] def boundedSampleRows(maxRows: Int, dim: Int): Int =
-    math.max(1L, math.min(maxRows.toLong, quantizerByteBudget / (dim.toLong * 8L))).toInt
+    math.max(1L, math.min(maxRows.toLong, DriverBudget.collectBytes / (dim.toLong * 8L))).toInt
 
   /** r22 (VERDICT r21 #3): largest query count whose per-query ADC LUTs
     * (m·codebookSize doubles each) fit the driver byte budget. */
   private[graft] def pqMaxBroadcastQueries(m: Int, codebookSize: Int,
-      budget: Long = quantizerByteBudget): Int =
+      budget: Long = DriverBudget.collectBytes): Int =
     math.max(1L, budget / (m.toLong * codebookSize.toLong * 8L)).toInt
 
   /** The loud guard on pqTopK's query-LUT collect (split out so the error
     * path is spec-testable without a multi-GB query fixture). */
   private[graft] def requireBoundedQueries(n: Int, m: Int, codebookSize: Int,
-      budget: Long = quantizerByteBudget): Unit = {
+      budget: Long = DriverBudget.collectBytes): Unit = {
     val maxQ = pqMaxBroadcastQueries(m, codebookSize, budget)
     require(n <= maxQ,
       s"pqTopK requires a bounded query set: got more than $maxQ queries " +
@@ -283,7 +281,7 @@ object Similarity {
     require(nCorpus > 0, "IVF needs a non-empty corpus")
     // byte-aware cap: one limit-1 job reads the dimensionality so the
     // collected sample is bounded in bytes, not just rows (see
-    // quantizerByteBudget) — negligible next to the count() above
+    // DriverBudget) — negligible next to the count() above
     val dim = feats.head.getSeq[Double](0).length
     val cap = boundedSampleRows(quantizerMaxRows, dim)
     val fitInput =
@@ -348,7 +346,7 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), normalized(col(vecCol)).as("nv"))
     val nCorpus = c.count()
     require(nCorpus > 0, "PQ needs a non-empty corpus")
-    // byte-aware cap (see quantizerByteBudget): dimensionality via one
+    // byte-aware cap (see DriverBudget): dimensionality via one
     // limit-1 job, then a bounded uniform sample collected ONCE; the m
     // sub-codebooks train driver-locally (see localKMeans — one pass of
     // cluster work replaces m × 10 Lloyd rounds of job scheduling)

@@ -332,6 +332,12 @@ object Dedup {
    * doc id in each cluster elected canonical. This is the step that turns
    * pairwise LSH output into an actual dedup decision — keep `is_canonical`,
    * drop the rest. Pair ids must come from `corpus`'s id column.
+   *
+   * Shape: one CC run over the pairs plus one narrow map. Pair lists up to
+   * the CC driver cap (~560k pairs) are solved by one union-find on the
+   * driver: a count, one bounded collect, and a broadcast join of the
+   * corpus ids against the (doc → root) map. Larger ones take O(log
+   * diameter) rounds of keyed shuffles (see [[graft.graph.ConnectedComponents]]).
    */
   def dupClusters(corpus: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
@@ -352,8 +358,9 @@ object Dedup {
    * and deterministic. Emits every document with its cluster, its quality,
    * and `keep` — exactly one true per cluster, singletons always kept.
    *
-   * Shape: one CC run over the pairs (see [[graft.graph.ConnectedComponents]]
-   * — O(log diameter) rounds of keyed shuffles) plus ONE extra shuffle on
+   * Shape: the CC run of [[dupClusters]] (a driver union-find up to the CC
+   * driver cap, O(log diameter) rounds of keyed shuffles beyond it; see
+   * [[graft.graph.ConnectedComponents]]) plus ONE extra shuffle on
    * cluster_id for the per-cluster argmax window. Nothing widens with
    * cluster size except the window partition, which is the same per-key
    * work a groupBy(cluster) would do.
@@ -383,7 +390,8 @@ object Dedup {
    * split must be replayable outside Spark (the smp12 driver row uses
    * plain modulo so DuckDB can replay it; the CERTIFIED property is
    * cluster-atomicity, which holds for any splitOf by construction).
-   * Same shape as [[dupClusters]]: the CC labels plus one narrow map.
+   * Shape: the CC run of [[dupClusters]] (driver union-find or label
+   * propagation, by pair count) plus one narrow map; no extra shuffle.
    */
   def leakageFreeSplit(docs: DataFrame, pairs: DataFrame, nSplits: Int,
       idCol: String = "doc_id",

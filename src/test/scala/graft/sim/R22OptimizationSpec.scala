@@ -150,6 +150,23 @@ class R22OptimizationSpec extends AnyFunSuite {
     }
   }
 
+  test("NearestCentroids picks cells on non-finite distances in the UDF's sort order") {
+    val bc = spark.sparkContext.broadcast(centers)
+    // all-NaN, all-+Inf (squared overflow) and mixed finite/+Inf/NaN distances
+    val mixed = centers :+ Array(Double.NaN, 0.0) :+ Array(Double.PositiveInfinity, 0.0)
+    val cases = Seq(Array(Double.NaN, 0.0) -> centers, Array(1e300, 1e300) -> centers,
+      Array(0.5, 0.5) -> mixed, Array(Double.NegativeInfinity, 0.0) -> mixed)
+    for ((v, cs) <- cases; np <- 1 to cs.length) {
+      val got = Quantizers.nearestCells(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(v), cs, np)
+      assert(got.toIntArray().toSeq == udfNearest(v.toSeq, cs, np),
+        s"v=${v.toSeq} nprobe=$np")
+    }
+    val df = vecDf(Seq(1L -> Array(Double.NaN, 0.0)))
+    assert(df.select(NearestCentroids.ofColumn(col("v"), bc, 4)).head().getSeq[Int](0) ==
+      udfNearest(Seq(Double.NaN, 0.0), centers, 4))
+  }
+
   // --- PQ encode / LUT / scores: native expressions vs UDF replicas -------
 
   test("PqEncode, PqLut and PqScores match the scalar-UDF formulations") {

@@ -671,4 +671,24 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkTestSession {
       .map(r => (r.getAs[String]("user_id"), r.getAs[Long]("session_start")) ->
         ((r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))).toMap
   }
+
+  test("replay state parallelism: one partition per 32 MiB, loud on a non-numeric or unknown input") {
+    def derive(configured: String, bytes: Long): (Option[Int], String) = {
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      try (graft.SparkEntry.replayStateParallelism(configured, bytes), err.toString)
+      finally System.setErr(saved)
+    }
+    derive("200", 10L << 20)._1 shouldBe Some(1)
+    derive("200", 100L << 20)._1 shouldBe Some(4)
+    derive("2", 1L << 40)._1 shouldBe Some(2)
+    val (unknown, unknownErr) = derive("200", Long.MaxValue)
+    unknown shouldBe Some(200)
+    unknownErr should include("fixture size unknown")
+    // a non-numeric conf (some deployments use "auto") runs the body unchanged
+    val (auto, autoErr) = derive("auto", 10L << 20)
+    auto shouldBe None
+    autoErr should include("'auto' is not a number")
+  }
 }
